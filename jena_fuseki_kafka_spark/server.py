@@ -34,7 +34,7 @@ from urllib.parse import parse_qs, urlparse
 
 from pyspark.sql import SparkSession, functions as F
 
-from .model import DEFAULT_GRAPH, QUAD_SCHEMA, RdfParseError
+from .model import DEFAULT_GRAPH, RdfParseError
 from .rdf.content_types import parse_payload
 from .rdf.serialize import (
     iter_nquads,
@@ -46,7 +46,7 @@ from .sparql import SparqlEngine
 from .sparql.ast import Call, ConstructQuery, DescribeQuery, SelectQuery
 from .sparql.translate import AGG_NAMES
 from .sparql.update import UpdateEngine
-from .store import QuadStore
+from .store import QuadStore, local_quads
 
 _JSON = "application/sparql-results+json"
 
@@ -74,16 +74,6 @@ def _bounded_result(ast) -> bool:
         )
     return False
 
-
-
-def _local_df(spark, rows, schema):
-    """Request-sized rows -> a SINGLE-partition DataFrame.  The default
-    createDataFrame parallelizes over defaultParallelism slices; a later
-    coalesce(1) (the store's small-commit write) then walks every Python
-    partition SERIALLY — ~32 Python-worker round-trips for a 1000-row
-    payload (measured 6s vs 0.4s).  One slice keeps the whole request on
-    one executor thread end-to-end."""
-    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
 
 
 class NotAcceptable(Exception):
@@ -231,7 +221,7 @@ class SparqlHttpServer:
         # dedup on the driver (request-sized list) so commit can skip the
         # dropDuplicates shuffle; the row count is the store's size hint
         rows = list(dict.fromkeys(rows))
-        adds = _local_df(self.spark, rows, QUAD_SCHEMA)
+        adds = local_quads(self.spark, rows)
         deletes = None
         if replace and store.version > 0:
             # an empty store has nothing to replace — keep deletes None so
@@ -260,8 +250,8 @@ class SparqlHttpServer:
         dels = [op[1:] for op in ops if op[0] == "D"]
         store.commit(
             self.spark,
-            adds=_local_df(self.spark, adds, QUAD_SCHEMA) if adds else None,
-            deletes=_local_df(self.spark, dels, QUAD_SCHEMA) if dels else None,
+            adds=local_quads(self.spark, adds) if adds else None,
+            deletes=local_quads(self.spark, dels) if dels else None,
             txn_id=self._next_txn("patch"),
             assume_unique=True,
             n_adds_hint=len(adds) if adds else None,

@@ -32,8 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..checkpointing import stable_checkpoint
-from ..model import DEFAULT_GRAPH, QUAD_COLS, QUAD_SCHEMA, RdfParseError
-from ..store import QuadStore
+from ..model import DEFAULT_GRAPH, QUAD_COLS, RdfParseError
+from ..store import QuadStore, local_quads
 from ..store.quadstore import _anti_join_quads
 from .ast import BGP
 from .parser import SparqlParser
@@ -632,12 +632,7 @@ class UpdateEngine:
             (into if into is not None else g, s, p, ok, ov, dt, lang)
             for _op, g, s, p, ok, ov, dt, lang in ops
         ]
-        # single slice: request-sized local rows on one executor thread
-        # (the small-commit coalesce(1) write walks Python partitions
-        # serially, so defaultParallelism near-empty slices cost seconds)
-        df = self.spark.createDataFrame(
-            self.spark.sparkContext.parallelize(rows, 1), QUAD_SCHEMA
-        )
+        df = local_quads(self.spark, rows)
         df._const_quad_count = len(rows)
         return df
 
@@ -664,12 +659,7 @@ class UpdateEngine:
                 rows.append((graph, fresh(s), p[1], "literal", o[1], o[2], o[3]))
             else:
                 rows.append((graph, fresh(s), p[1], o[0], fresh(o), None, None))
-        # single slice: request-sized local rows on one executor thread
-        # (the small-commit coalesce(1) write walks Python partitions
-        # serially, so defaultParallelism near-empty slices cost seconds)
-        df = self.spark.createDataFrame(
-            self.spark.sparkContext.parallelize(rows, 1), QUAD_SCHEMA
-        )
+        df = local_quads(self.spark, rows)
         df._const_quad_count = len(rows)
         return df
 

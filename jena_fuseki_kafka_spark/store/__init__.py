@@ -1,3 +1,3 @@
-from .quadstore import QuadStore
+from .quadstore import QuadStore, local_quads
 
-__all__ = ["QuadStore"]
+__all__ = ["QuadStore", "local_quads"]

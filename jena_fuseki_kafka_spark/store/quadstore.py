@@ -18,8 +18,18 @@ projector per dataset — FKRegistry.java:45-99):
   1. write new parquet files for the net adds
   2. if there are deletes: rewrite only the files that contain matching
      quads (read, anti-join, write survivor file)
-  3. atomically swap the manifest (os.replace) — readers referencing the
-     old manifest keep a consistent snapshot
+  3. atomically swap the manifest (fsync'd tmp file + os.replace + fsync
+     of the store directory) — readers referencing the old manifest keep a
+     consistent snapshot, and a power loss leaves the old or the new one
+
+Two writers implement the protocol with identical results.  Bounded
+commits whose caller knows the row counts (``n_adds_hint``/
+``n_deletes_hint``: HTTP mutations, trickle-sized ingest micro-batches)
+run on the driver in Arrow: bucket ids from Spark's ``xxhash64`` over the
+collected payload, only the touched bucket leaves read with pyarrow,
+null-safe Arrow anti-joins, one leaf per touched bucket.  Everything else
+(bulk batches, unhinted or store-sized commits, touched leaves above
+``SMALL_COMMIT_ROWS``) runs as Spark jobs.
 
 Idempotent re-apply (at-least-once safety, SURVEY.md §7.4): commits carry a
 ``txn_id``; re-committing an already-recorded txn_id is a no-op, which makes
@@ -48,6 +58,9 @@ import uuid
 
 from functools import reduce
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -114,6 +127,70 @@ def _quad_eq_cond(left: DataFrame):
     )
 
 
+# Arrow twin of QUAD_SCHEMA for leaves read and written on the driver
+_ARROW_SCHEMA = pa.schema([pa.field(c, pa.string()) for c in QUAD_COLS])
+
+
+def local_quads(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """Quad tuples as a LocalRelation-backed DataFrame.
+
+    The rows travel to the JVM as one Arrow table and stay in the plan, so
+    projecting and collecting them (the driver commit path) launches no
+    Spark job — unlike ``createDataFrame(list)``, which builds a Python
+    RDD whose every collect is a job."""
+    columns = list(zip(*rows)) if rows else [()] * len(QUAD_COLS)
+    table = pa.table([pa.array(c, pa.string()) for c in columns], schema=_ARROW_SCHEMA)
+    return spark.createDataFrame(table, QUAD_SCHEMA)
+
+
+def _collect_bucketed(df: DataFrame | None, bucket_col, dedup: bool) -> pa.Table | None:
+    """Collect a bounded quad frame plus its ``bucket`` column as Arrow."""
+    if df is None:
+        return None
+    rows = [tuple(r) for r in df.select(*QUAD_COLS, bucket_col.alias("bucket")).collect()]
+    if dedup:
+        rows = list(dict.fromkeys(rows))
+    if not rows:
+        return None
+    columns = list(zip(*rows))
+    return pa.table(
+        [pa.array(c, pa.string()) for c in columns[:-1]] + [pa.array(columns[-1], pa.int32())],
+        names=QUAD_COLS + ["bucket"],
+    )
+
+
+def _in_bucket(t: pa.Table | None, b: int) -> pa.Table | None:
+    """The QUAD_COLS rows of ``t`` in bucket ``b``; None when there are none."""
+    if t is None:
+        return None
+    sel = t.filter(pc.equal(t.column("bucket"), b)).select(QUAD_COLS)
+    return sel if sel.num_rows else None
+
+
+def _null_safe_keys(t: pa.Table) -> pa.Table:
+    """Join keys for NULL-safe equality: every quad column with NULL filled,
+    plus an is-null flag per column (Arrow joins never match NULL keys,
+    Spark's ``<=>`` does — NULL and "" must stay distinct)."""
+    cols, names = [], []
+    for c in QUAD_COLS:
+        col = t.column(c)
+        cols += [pc.fill_null(col, ""), pc.is_null(col)]
+        names += [c, f"{c}__null"]
+    return pa.table(cols, names=names)
+
+
+def _anti_join_arrow(left: pa.Table, right: pa.Table) -> pa.Table:
+    """Rows of ``left`` absent from ``right`` (QUAD_COLS, NULL-safe), in
+    ``left``'s order."""
+    if not left.num_rows or not right.num_rows:
+        return left
+    keys = _null_safe_keys(left)
+    keys = keys.append_column("__row", pa.array(range(left.num_rows), pa.int64()))
+    kept = keys.join(_null_safe_keys(right), keys=keys.column_names[:-1], join_type="left anti")
+    rows = kept.column("__row")
+    return left.take(pc.take(rows, pc.sort_indices(rows)))
+
+
 class QuadStore:
     def __init__(self, path: str, n_buckets: int = 16, grace_versions: int = 2):
         self.path = path
@@ -153,19 +230,14 @@ class QuadStore:
     # write parallelism and file sizing hold at scale.
     SMALL_COMMIT_ROWS = 200_000
 
-    # commits at or below THIS row count (with every affected bucket leaf
-    # under SMALL_COMMIT_ROWS total) run entirely on the DRIVER: payload
-    # rows are collected (request payloads are LocalRelation-backed, so
-    # the collect launches no job), set-semantics dedup and the delete
-    # rewrite are computed in Python over pyarrow-read leaves, and the new
-    # leaf is written with pyarrow — ZERO Spark jobs per commit (r16;
-    # guide §5's "the driver should do almost no data work" cuts the
-    # other way for control-plane-sized mutations: three Spark job
-    # launches to insert one quad IS the data work).  Buckets stay
-    # bit-compatible via the pure-Python xxh64 twin (store/xxh64.py,
-    # parity-pinned by test).  Production sizing: request/interactive
-    # mutations are ≤ thousands of rows; anything bigger arrives via the
-    # ingest stream, which keeps the distributed writer.
+    # hinted commits at or below THIS row count per side, whose touched
+    # bucket leaves hold at most SMALL_COMMIT_ROWS rows, run on the DRIVER
+    # in Arrow (_driver_commit): the payload is collected (LocalRelation-
+    # backed payloads collect without a job), only the touched leaves are
+    # read, and the bucket rewrite is written with pyarrow — zero Spark
+    # jobs per commit.  Request-sized HTTP mutations and trickle-sized
+    # ingest micro-batches take it at any store size; bulk batches and
+    # unhinted commits keep the distributed writer.
     DRIVER_COMMIT_ROWS = 20_000
 
     def _write_partitioned(self, df: DataFrame, small: bool = False) -> list[str]:
@@ -185,8 +257,6 @@ class QuadStore:
     def _entry_row_count(self, entry: str) -> int:
         """Row count of a manifest leaf from parquet footer metadata — no
         Spark job, just footer reads (used to size delete rewrites)."""
-        import pyarrow.parquet as pq
-
         leaf = os.path.join(self.files_dir, entry)
         total = 0
         for f in os.listdir(leaf):
@@ -210,7 +280,17 @@ class QuadStore:
         tmp = self._manifest_path() + ".tmp-" + uuid.uuid4().hex
         with open(tmp, "w") as f:
             json.dump(manifest, f)
+            f.flush()
+            # durable before it becomes visible: without this a power loss
+            # after the rename can leave an empty manifest
+            os.fsync(f.fileno())
         os.replace(tmp, self._manifest_path())  # atomic on POSIX
+        # ... and the rename itself durable
+        dir_fd = os.open(self.path, os.O_RDONLY)
+        try:
+            os.fsync(dir_fd)
+        finally:
+            os.close(dir_fd)
 
     @property
     def version(self) -> int:
@@ -288,13 +368,12 @@ class QuadStore:
         COPY) must pass False so the join shuffles instead of broadcasting
         a store-sized side into every executor (and the driver).
 
-        ``n_adds_hint``/``n_deletes_hint`` are row counts the caller
-        already knows (e.g. an HTTP handler that parsed the payload on the
-        driver).  When the hint is request-sized AND the store itself is
-        small, commit skips the per-side bucket-stats Spark action and
-        scans every bucket instead — one Spark job per commit instead of
-        two or three.  Pruning matters exactly when the store is large, so
-        the fast path is gated on store size and changes nothing at scale.
+        ``n_adds_hint``/``n_deletes_hint`` are row counts (or upper bounds)
+        the caller already knows (an HTTP handler that parsed the payload
+        on the driver, the projector's bounded collect).  When every
+        present side is hinted at most ``DRIVER_COMMIT_ROWS`` and the
+        touched bucket leaves hold at most ``SMALL_COMMIT_ROWS`` rows, the
+        commit runs on the driver in Arrow (``_driver_commit``).
 
         Thread-safe: holds the per-store write lock for the whole
         read-manifest -> write-files -> swap-manifest sequence, so HTTP
@@ -306,17 +385,6 @@ class QuadStore:
                 spark, adds, deletes, txn_id, assume_unique,
                 broadcast_deletes, broadcast_adds, n_adds_hint, n_deletes_hint,
             )
-
-    def _small_store(self, files: list[str]) -> bool:
-        """True when the whole store is small enough that bucket pruning
-        cannot pay for its stats collection (parquet-footer row counts —
-        no Spark job)."""
-        if len(files) > 64:
-            return False
-        try:
-            return sum(self._entry_row_count(f) for f in files) <= self.SMALL_COMMIT_ROWS
-        except OSError:
-            return False
 
     def _commit_locked(
         self,
@@ -338,19 +406,12 @@ class QuadStore:
         new_files: list[str] = []
         drop_files: list[str] = []
 
-        # fast path only when EVERY present side comes with a hint: a
-        # hintless side must keep its stats action, not inherit the skip
-        hinted_small = (
+        # driver path only when EVERY present side comes with a hint: a
+        # hintless side may be store-sized and must not be collected
+        if (
             (n_adds_hint is not None or n_deletes_hint is not None)
             and (adds is None or n_adds_hint is not None)
             and (deletes is None or n_deletes_hint is not None)
-            and (n_adds_hint or 0) <= self.SMALL_COMMIT_ROWS
-            and (n_deletes_hint or 0) <= self.SMALL_COMMIT_ROWS
-            and self._small_store(current_files)
-        )
-
-        if (
-            hinted_small
             and (n_adds_hint or 0) <= self.DRIVER_COMMIT_ROWS
             and (n_deletes_hint or 0) <= self.DRIVER_COMMIT_ROWS
         ):
@@ -359,7 +420,8 @@ class QuadStore:
             )
             if version is not None:
                 return version
-            # fall through to the Spark path on any ineligibility
+            # fall through to the Spark path when the touched leaves are
+            # too big (or a legacy flat leaf is present)
 
         del_buckets: set[int] = set()
         if deletes is not None:
@@ -367,17 +429,10 @@ class QuadStore:
             # deduping the delete side is pure wasted shuffle.  One
             # aggregation answers both "any deletes?" and "which buckets?"
             deletes = deletes.select(*QUAD_COLS)
-            if hinted_small:
-                # hinted fast path: treat every bucket as affected — the
-                # rewrite reads the (small) whole store, no stats action
-                del_buckets = (
-                    {self._bucket_of(f) for f in current_files} if n_deletes_hint else set()
-                )
-            else:
-                del_buckets = {
-                    r["b"]
-                    for r in deletes.groupBy(self._bucket_col().alias("b")).count().collect()
-                }
+            del_buckets = {
+                r["b"]
+                for r in deletes.groupBy(self._bucket_col().alias("b")).count().collect()
+            }
 
         if del_buckets and current_files:
             # Rewrite-on-delete, restricted to the buckets the delete keys
@@ -408,23 +463,16 @@ class QuadStore:
             adds = adds.select(*QUAD_COLS)
             if not assume_unique:
                 adds = adds.dropDuplicates(QUAD_COLS)
-            if hinted_small and n_adds_hint is not None:
-                # hinted fast path: the caller counted the rows on the
-                # driver; scan every (small) bucket for the set-semantics
-                # dedup instead of collecting per-bucket stats first
-                n_adds = n_adds_hint
-                scan_files = list(current_files)
-            else:
-                # one aggregation answers "which buckets?" (snapshot dedup
-                # only needs those) AND "how many rows?" (sizes the write)
-                add_stats = adds.groupBy(self._bucket_col().alias("b")).count().collect()
-                add_buckets = {r["b"] for r in add_stats}
-                n_adds = sum(r["count"] for r in add_stats)
-                scan_files = [
-                    f
-                    for f in current_files
-                    if self._bucket_of(f) is None or self._bucket_of(f) in add_buckets
-                ]
+            # one aggregation answers "which buckets?" (snapshot dedup only
+            # needs those) AND "how many rows?" (sizes the write)
+            add_stats = adds.groupBy(self._bucket_col().alias("b")).count().collect()
+            add_buckets = {r["b"] for r in add_stats}
+            n_adds = sum(r["count"] for r in add_stats)
+            scan_files = [
+                f
+                for f in current_files
+                if self._bucket_of(f) is None or self._bucket_of(f) in add_buckets
+            ]
             if scan_files:
                 paths = [os.path.join(self.files_dir, f) for f in scan_files]
                 current = spark.read.schema(QUAD_SCHEMA).parquet(*paths)
@@ -448,7 +496,7 @@ class QuadStore:
         self._write_manifest(manifest)
         return manifest["version"]
 
-    # -- driver-side small-commit fast path -------------------------------
+    # -- driver-side (Arrow) commit path ----------------------------------
     def _driver_commit(
         self,
         manifest: dict,
@@ -457,139 +505,78 @@ class QuadStore:
         txn_id: str | None,
         assume_unique: bool,
     ) -> int | None:
-        """Apply a request-sized commit entirely on the driver: collect the
-        payload rows (LocalRelation-backed for every hinted caller, so no
-        job launches), read the affected bucket leaves with pyarrow,
-        compute the delete rewrite and the set-semantics dedup as plain
-        Python set operations (tuple equality is null-safe, matching the
-        Spark path's eqNullSafe joins), and write the new leaf with
-        pyarrow in the exact layout the Spark writer produces
-        (files/<uuid>/bucket=N/, bucket directory-encoded, QUAD_COLS
-        inside).  Returns the new version, or None to fall back to the
-        distributed writer (oversized leaf reads / missing pyarrow).
+        """Apply a bounded commit on the driver, bucket by bucket, in Arrow.
 
-        Commit semantics are byte-for-byte those of the Spark path:
-        deletes first (rewrite affected buckets, carry the rest), then
-        adds deduped against the post-delete snapshot, one manifest swap.
-        Bucket assignment uses the pure-Python xxh64 twin — bit-parity
-        with Spark's xxhash64 is pinned by test, so bucket pruning keeps
-        finding every row either writer placed."""
-        try:
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-        except ImportError:  # pragma: no cover - pyarrow ships with pyspark
+        The payload is collected with its bucket id computed by Spark's own
+        ``xxhash64`` expression (a LocalRelation-backed payload — see
+        :func:`local_quads` — collects without launching a job).  Only the
+        leaves of the touched buckets are read, with ``pyarrow.parquet``.
+        Per touched bucket: the delete rewrite and the set-semantics dedup
+        are null-safe Arrow anti-joins (deletes first, then adds deduped
+        against the survivors, as on the Spark path), and the bucket's new
+        rows — survivors if anything was deleted, plus fresh adds — go to
+        one leaf in the Spark writer's ``files/<uuid>/bucket=N`` layout.
+        Untouched buckets carry over as they are.
+
+        Returns the new version, or None to fall back to the Spark path:
+        the touched leaves hold more than ``SMALL_COMMIT_ROWS`` rows, or the
+        store still has a legacy un-bucketed leaf."""
+        files = manifest["files"]
+        if any(self._bucket_of(f) is None for f in files):
             return None
-        from .xxh64 import spark_bucket
-
-        scol = QUAD_COLS.index("subject")
-        add_rows = (
-            [tuple(r) for r in adds.select(*QUAD_COLS).collect()]
-            if adds is not None
-            else []
+        add_t = _collect_bucketed(adds, self._bucket_col(), dedup=not assume_unique)
+        del_t = _collect_bucketed(deletes, self._bucket_col(), dedup=False)
+        touched = sorted(
+            {b for t in (add_t, del_t) if t is not None for b in t.column("bucket").to_pylist()}
         )
-        del_rows = (
-            [tuple(r) for r in deletes.select(*QUAD_COLS).collect()]
-            if deletes is not None
-            else []
-        )
-        if not assume_unique:
-            add_rows = list(dict.fromkeys(add_rows))
-
-        current_files = list(manifest["files"])
-        del_buckets = {spark_bucket(r[scol], self.n_buckets) for r in del_rows}
-        add_buckets = {spark_bucket(r[scol], self.n_buckets) for r in add_rows}
-
-        def _affected(files: list[str], buckets: set[int]) -> list[str]:
-            return [
-                f
-                for f in files
-                if self._bucket_of(f) is None or self._bucket_of(f) in buckets
-            ]
-
-        need = set()
-        if del_rows:
-            need |= set(_affected(current_files, del_buckets))
-        if add_rows:
-            need |= set(_affected(current_files, add_buckets))
+        leaves = {b: [f for f in files if self._bucket_of(f) == b] for b in touched}
         try:
-            if sum(self._entry_row_count(f) for f in need) > self.SMALL_COMMIT_ROWS:
-                return None
+            touched_rows = sum(self._entry_row_count(f) for fs in leaves.values() for f in fs)
         except OSError:
             return None
+        if touched_rows > self.SMALL_COMMIT_ROWS:
+            return None
 
-        # one pyarrow read per needed leaf -> rows as tuples, bucket known
-        leaf_rows: dict[str, list[tuple]] = {}
-        for entry in need:
-            leaf = os.path.join(self.files_dir, entry)
-            rows: list[tuple] = []
-            for fname in sorted(os.listdir(leaf)):
-                if fname.endswith(".parquet"):
-                    t = pq.read_table(
-                        os.path.join(leaf, fname), columns=list(QUAD_COLS)
-                    )
-                    cols = [t.column(c).to_pylist() for c in QUAD_COLS]
-                    rows.extend(zip(*cols) if cols and t.num_rows else [])
-            leaf_rows[entry] = rows
-
-        def _bucket_of_row(entry: str, row: tuple) -> int:
-            b = self._bucket_of(entry)
-            return b if b is not None else spark_bucket(row[scol], self.n_buckets)
-
-        schema = pa.schema([pa.field(c, pa.string()) for c in QUAD_COLS])
-
-        def _write_leaf(rows_by_bucket: dict[int, list[tuple]]) -> list[str]:
-            name = uuid.uuid4().hex
-            entries = []
-            for b in sorted(rows_by_bucket):
-                rows = rows_by_bucket[b]
-                if not rows:
-                    continue
+        name = uuid.uuid4().hex
+        new_files: list[str] = []
+        drop_files: list[str] = []
+        for b in touched:
+            current = self._read_leaves(leaves[b])
+            kept = current
+            dels = _in_bucket(del_t, b)
+            if dels is not None and current.num_rows:
+                kept = _anti_join_arrow(current, dels)
+            out = _in_bucket(add_t, b)
+            if out is not None:
+                out = _anti_join_arrow(out, kept)
+            if kept.num_rows < current.num_rows:
+                # something was deleted: the bucket's survivors replace its leaves
+                drop_files.extend(leaves[b])
+                out = kept if out is None else pa.concat_tables([kept, out])
+            if out is not None and out.num_rows:
                 leaf = os.path.join(self.files_dir, name, f"bucket={b}")
                 os.makedirs(leaf, exist_ok=True)
-                table = pa.table(
-                    {c: [r[i] for r in rows] for i, c in enumerate(QUAD_COLS)},
-                    schema=schema,
-                )
-                pq.write_table(table, os.path.join(leaf, "part-00000.parquet"))
-                entries.append(f"{name}/bucket={b}")
-            return entries
+                pq.write_table(out, os.path.join(leaf, "part-00000.parquet"))
+                new_files.append(f"{name}/bucket={b}")
 
-        drop_files: list[str] = []
-        if del_rows:
-            affected = _affected(current_files, del_buckets)
-            del_set = set(del_rows)
-            survivors: dict[int, list[tuple]] = {}
-            for entry in affected:
-                for row in leaf_rows[entry]:
-                    if row not in del_set:
-                        survivors.setdefault(_bucket_of_row(entry, row), []).append(row)
-            survivor_entries = _write_leaf(survivors)
-            drop_files = affected
-            untouched = [f for f in current_files if f not in set(affected)]
-            current_files = untouched + survivor_entries
-            # keep the in-memory view consistent for the dedup below
-            for entry in survivor_entries:
-                b = self._bucket_of(entry)
-                leaf_rows[entry] = survivors.get(b, [])
-
-        new_files: list[str] = []
-        if add_rows:
-            existing: set[tuple] = set()
-            for entry in _affected(current_files, add_buckets):
-                existing.update(leaf_rows.get(entry, ()))
-            fresh: dict[int, list[tuple]] = {}
-            for row in add_rows:
-                if row not in existing:
-                    fresh.setdefault(spark_bucket(row[scol], self.n_buckets), []).append(row)
-            new_files = _write_leaf(fresh)
-
+        dropped = set(drop_files)
         manifest["version"] += 1
-        manifest["files"] = current_files + new_files
+        manifest["files"] = [f for f in files if f not in dropped] + new_files
         if txn_id is not None:
             manifest["txns"] = (manifest["txns"] + [txn_id])[-1000:]
         self._retire(manifest, drop_files)
         self._write_manifest(manifest)
         return manifest["version"]
+
+    def _read_leaves(self, entries: list[str]) -> pa.Table:
+        """The rows of some bucket leaves as one Arrow table (QUAD_COLS)."""
+        tables = [
+            pq.read_table(os.path.join(self.files_dir, e, f), columns=QUAD_COLS).cast(_ARROW_SCHEMA)
+            for e in entries
+            for f in sorted(os.listdir(os.path.join(self.files_dir, e)))
+            if f.endswith(".parquet")
+        ]
+        return pa.concat_tables(tables) if tables else _ARROW_SCHEMA.empty_table()
 
     # -- maintenance ------------------------------------------------------
     def compact(self, spark: SparkSession, min_files_per_bucket: int = 2) -> int:

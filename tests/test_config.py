@@ -2,6 +2,8 @@
 (TestKafkaConnectorAssembler.java:36-380, TestConnectorDescriptor.java,
 TestEnvVariables.java:41-121, TestConfig.java bad-config-*.ttl cases)."""
 
+import os
+
 import pytest
 
 from jena_fuseki_kafka_spark.config import (
@@ -176,6 +178,9 @@ class TestTopicGate:
 
 
 REF_FILES = "/root/reference/jena-fuseki-kafka-module/src/test/files"
+if not os.path.isdir(REF_FILES):
+    # in-repo copies of the reference's connector configs (tests/fixtures/fk)
+    REF_FILES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "fk")
 
 
 class TestTurtleConfigLoader:

@@ -5,6 +5,7 @@ routing with Dead-Letter-* headers (:345-374), good-prefix guarantee
 """
 
 import datetime
+import itertools
 import os
 
 import pytest
@@ -63,6 +64,32 @@ class TestQuadStore:
         v2 = store.commit(spark, adds=df, txn_id="batch-1")  # crash-replay
         assert v1 == v2
         assert store.count(spark) == 1
+
+    def test_manifest_swap_is_durable(self, tmp_path, monkeypatch):
+        """The staged manifest is fsync'd before it replaces the live one,
+        and the store directory is fsync'd after the rename — otherwise a
+        power loss can leave an empty (unreadable) manifest."""
+        store = QuadStore(str(tmp_path / "q"))
+        calls = []
+        real_fsync, real_replace = os.fsync, os.replace
+
+        def fsync(fd):
+            calls.append(("fsync", os.path.realpath(f"/proc/self/fd/{fd}")))
+            real_fsync(fd)
+
+        def replace(src, dst):
+            calls.append(("replace", os.path.realpath(dst)))
+            real_replace(src, dst)
+
+        monkeypatch.setattr(os, "fsync", fsync)
+        monkeypatch.setattr(os, "replace", replace)
+        store._write_manifest({"version": 7, "files": [], "txns": [], "tombstones": []})
+        manifest = os.path.realpath(store._manifest_path())
+        assert [c[0] for c in calls] == ["fsync", "replace", "fsync"]
+        assert ".tmp-" in calls[0][1]  # the staged file, before the swap
+        assert calls[1][1] == manifest
+        assert calls[2][1] == os.path.realpath(store.path)  # the directory entry
+        assert store.version == 7
 
     def test_mvcc_snapshot(self, spark, tmp_path):
         store = QuadStore(str(tmp_path / "q"))
@@ -299,6 +326,24 @@ class TestProjector:
         assert deletes.count() == 0
 
 
+    def test_net_effect_tie_across_partitions_is_deterministic(self, spark, tmp_path):
+        """An A and a D of one quad at the same offset in two partitions
+        tie on offset and op index; the winner must not depend on the row
+        order or the partitioning of the batch (the later partition wins)."""
+        quad = '<http://e/s> <http://e/p> "x" .'
+        for a_part, d_part, present in ((0, 1, False), (1, 0, True)):
+            a = ev(f"A {quad}", 5, "application/rdf-patch", partition=a_part)
+            d = ev(f"D {quad}", 5, "application/rdf-patch", partition=d_part)
+            seen = set()
+            for i, (rows, n) in enumerate(itertools.product(([a, d], [d, a]), (1, 4))):
+                store = QuadStore(str(tmp_path / f"q{a_part}-{i}"))
+                # seed the quad so a winning D has something to delete
+                apply_event_batch(spark, store, events_df(spark, [ev(quad, 0)]), txn_id="seed")
+                apply_event_batch(spark, store, events_df(spark, rows).repartition(n))
+                seen.add(store.count(spark) == 1)
+            assert seen == {present}, (a_part, d_part, seen)
+
+
 class TestBucketPruning:
     def test_delete_rewrites_only_affected_buckets(self, spark, tmp_path):
         """Bucket-granular manifest: a delete must carry over every leaf
@@ -460,9 +505,9 @@ class TestVacuumGrace:
 
 
 class TestHintedSmallCommit:
-    """The n_adds_hint/n_deletes_hint fast path (no per-side bucket-stats
-    Spark action) must preserve set semantics and delete correctness
-    exactly — it only changes which files are scanned, never the result."""
+    """Hinted commits (n_adds_hint/n_deletes_hint: the driver-side Arrow
+    path) must preserve set semantics and delete correctness exactly —
+    including payloads that are not LocalRelation-backed."""
 
     def test_hinted_add_dedups_against_store(self, spark, tmp_path):
         store = QuadStore(str(tmp_path / "h"), n_buckets=4)
