@@ -35,10 +35,11 @@ abort-and-replay, good-prefix guarantee) with a declarative formulation:
 - **Two paths by batch size.**  A batch whose net effect plus dead letters
   fits ``QuadStore.DRIVER_COMMIT_ROWS`` (the trickle regime) costs one
   bounded collect; its net adds and deletes go to ``QuadStore.commit`` as
-  LocalRelation-backed frames with exact size hints, which routes them to
-  the store's driver-side Arrow commit.  Larger batches (bulk, soak,
-  replay bursts) keep the distributed path: counts from the persisted
-  aggregate, then a Spark commit.
+  LocalRelation-backed frames, which the store sees are local and small
+  and commits on the driver in Arrow.  Larger batches (bulk, soak, replay
+  bursts) keep the distributed path: counts from the persisted aggregate,
+  then a commit of frames that read the aggregate, which the store runs
+  as Spark jobs.
 """
 
 from __future__ import annotations
@@ -242,10 +243,6 @@ def apply_event_batch(
             # already known here — the net-effect aggregate counted them)
             broadcast_adds=n_adds <= BROADCAST_BATCH_MAX_ROWS,
             broadcast_deletes=n_deletes <= BROADCAST_BATCH_MAX_ROWS,
-            # the bounded collect's exact counts route the commit to the
-            # store's driver path
-            n_adds_hint=n_adds if bounded else None,
-            n_deletes_hint=n_deletes if bounded else None,
         )
         return {
             "version": version,

@@ -435,8 +435,9 @@ def d06(spark, sf_dir):
 # even when lazy) plus a cluster job.  Same size-adaptive pattern as the
 # QuadStore driver commit: request-scale inputs skip the distributed
 # machinery, production-scale inputs (a 100 TB corpus' near-dup graph)
-# exceed the bound and keep the distributed fixpoint unchanged.  16
-# bytes x 200k edges ~ 3 MB on the driver — far under any collect limit.
+# exceed the bound and keep the distributed fixpoint unchanged.  The
+# collect builds one Python Row per edge: 200k int64 edges held ~66 MB on
+# the driver (tracemalloc, pyspark 4.1), ~84 MB with ~30-char string ids.
 CC_DRIVER_MAX_EDGES = 200_000
 
 
@@ -450,7 +451,12 @@ def _driver_components(edges, rows):
     fixpoint HashMin converges to.  Node ordering matches Spark's: ids
     are int64 in every gate, and for strings Python's code-point
     comparison equals UTF8String's byte comparison (UTF-8 byte order is
-    code-point order)."""
+    code-point order).
+
+    A NULL id equals nothing, so its edges merge no components — exactly
+    as the fixpoint's equi-joins never match it.  Like the fixpoint, the
+    output still carries one NULL row, labelled with the component of its
+    smallest non-NULL neighbour (NULL when it has none)."""
     from pyspark.sql import types as T
 
     parent: dict = {}
@@ -464,15 +470,21 @@ def _driver_components(edges, rows):
         return r
 
     nodes = set()
+    null_nbrs = []
     for row in rows:
         a, b = row[0], row[1]
         nodes.add(a)
         nodes.add(b)
+        if a is None or b is None:
+            null_nbrs += [x for x in (a, b) if x is not None]
+            continue
         ra, rb = find(a), find(b)
         if ra != rb:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
-    out = sorted((v, find(v)) for v in nodes)
+    out = sorted((v, find(v)) for v in nodes if v is not None)
+    if None in nodes:
+        out.append((None, find(min(null_nbrs)) if null_nbrs else None))
     id_type = edges.schema["src"].dataType
     schema = T.StructType(
         [T.StructField("v", id_type), T.StructField("comp", id_type)]
@@ -502,7 +514,8 @@ def connected_components(
     ``CC_DRIVER_MAX_EDGES``; pass 0 to force the distributed path) is
     solved with union-find on the driver — identical labels, none of the
     per-round planning+job toll.  Above the bound the distributed
-    fixpoint below runs unchanged.
+    fixpoint below runs unchanged.  ``max_rounds`` binds only that
+    fixpoint: the driver union-find has no rounds.
 
     Each round does two steps, both |edges|/|V|-bounded shuffles with
     localCheckpoint truncating the per-round lineage:

@@ -219,20 +219,19 @@ class SparqlHttpServer:
             g = op[1] if op[1] != DEFAULT_GRAPH and graph is None else target
             rows.append((g,) + tuple(op[2:]))
         # dedup on the driver (request-sized list) so commit can skip the
-        # dropDuplicates shuffle; the row count is the store's size hint
+        # dropDuplicates shuffle
         rows = list(dict.fromkeys(rows))
         adds = local_quads(self.spark, rows)
         deletes = None
         if replace and store.version > 0:
             # an empty store has nothing to replace — keep deletes None so
-            # the hinted single-action commit applies on first upload
+            # the first upload commits as a local payload
             deletes = store.read(self.spark).filter(F.col("graph") == target)
         store.commit(
             self.spark, adds=adds, deletes=deletes, txn_id=self._next_txn("gsp"),
             assume_unique=True,
             # a replaced graph is store-sized: shuffle, never broadcast
             broadcast_deletes=deletes is None,
-            n_adds_hint=len(rows) if deletes is None else None,
         )
         return len(rows)
 
@@ -254,8 +253,6 @@ class SparqlHttpServer:
             deletes=local_quads(self.spark, dels) if dels else None,
             txn_id=self._next_txn("patch"),
             assume_unique=True,
-            n_adds_hint=len(adds) if adds else None,
-            n_deletes_hint=len(dels) if dels else None,
         )
         return len(adds), len(dels)
 

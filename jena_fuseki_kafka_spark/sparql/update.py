@@ -383,11 +383,6 @@ class UpdateEngine:
         # store-sized and must ride shuffle joins, never a broadcast.
         adds_bounded = True
         dels_bounded = True
-        # row-count hints: exact while every contribution came from local
-        # rows (INSERT/DELETE DATA, LOAD); a pattern-derived set (unknown
-        # size) resets to None and commit falls back to its stats action
-        adds_hint: int | None = 0
-        dels_hint: int | None = 0
         load_index = 0  # per-request LOAD sequence number (bnode freshness)
 
         def view() -> DataFrame:
@@ -399,9 +394,7 @@ class UpdateEngine:
             return v
 
         def do_insert(df: DataFrame, bounded: bool = True) -> None:
-            nonlocal pending_adds, pending_dels, adds_bounded, adds_hint
-            n = getattr(df, "_const_quad_count", None)
-            adds_hint = (adds_hint + n) if (n is not None and adds_hint is not None) else None
+            nonlocal pending_adds, pending_dels, adds_bounded
             df = df.select(*QUAD_COLS)
             if pending_dels is not None:
                 pending_dels = _anti_join_quads(pending_dels, df, broadcast_right=bounded)
@@ -413,9 +406,7 @@ class UpdateEngine:
             )
 
         def do_delete(df: DataFrame, bounded: bool = True) -> None:
-            nonlocal pending_adds, pending_dels, dels_bounded, dels_hint
-            n = getattr(df, "_const_quad_count", None)
-            dels_hint = (dels_hint + n) if (n is not None and dels_hint is not None) else None
+            nonlocal pending_adds, pending_dels, dels_bounded
             df = df.select(*QUAD_COLS)
             if pending_adds is not None:
                 pending_adds = _anti_join_quads(pending_adds, df, broadcast_right=bounded)
@@ -561,10 +552,6 @@ class UpdateEngine:
             txn_id=txn_id,
             broadcast_adds=adds_bounded,
             broadcast_deletes=dels_bounded,
-            # hints are upper bounds (anti-joins only shrink the sets):
-            # safe for the small-commit gate, None when pattern-derived
-            n_adds_hint=adds_hint if pending_adds is not None else None,
-            n_deletes_hint=dels_hint if pending_dels is not None else None,
         )
         return {"version": version}
 
@@ -632,9 +619,7 @@ class UpdateEngine:
             (into if into is not None else g, s, p, ok, ov, dt, lang)
             for _op, g, s, p, ok, ov, dt, lang in ops
         ]
-        df = local_quads(self.spark, rows)
-        df._const_quad_count = len(rows)
-        return df
+        return local_quads(self.spark, rows)
 
     def _const_quads(self, quads: list, bnode_suffix: str | None = None) -> DataFrame:
         """Constant quads from INSERT DATA / DELETE DATA templates.
@@ -659,9 +644,7 @@ class UpdateEngine:
                 rows.append((graph, fresh(s), p[1], "literal", o[1], o[2], o[3]))
             else:
                 rows.append((graph, fresh(s), p[1], o[0], fresh(o), None, None))
-        df = local_quads(self.spark, rows)
-        df._const_quad_count = len(rows)
-        return df
+        return local_quads(self.spark, rows)
 
     def _instantiate(
         self, bindings: DataFrame, template: list, bnode_suffix: str | None = None

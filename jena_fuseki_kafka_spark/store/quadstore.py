@@ -22,14 +22,14 @@ projector per dataset — FKRegistry.java:45-99):
      of the store directory) — readers referencing the old manifest keep a
      consistent snapshot, and a power loss leaves the old or the new one
 
-Two writers implement the protocol with identical results.  Bounded
-commits whose caller knows the row counts (``n_adds_hint``/
-``n_deletes_hint``: HTTP mutations, trickle-sized ingest micro-batches)
-run on the driver in Arrow: bucket ids from Spark's ``xxhash64`` over the
+Two writers implement the protocol with identical results; the store
+picks one from the payload's plan.  Commits of local rows only (HTTP
+mutations, trickle-sized micro-batches) within ``DRIVER_COMMIT_ROWS`` run
+on the driver in Arrow: bucket ids from Spark's ``xxhash64`` over the
 collected payload, only the touched bucket leaves read with pyarrow,
 null-safe Arrow anti-joins, one leaf per touched bucket.  Everything else
-(bulk batches, unhinted or store-sized commits, touched leaves above
-``SMALL_COMMIT_ROWS``) runs as Spark jobs.
+(bulk batches, payloads that read the store, a file or an RDD, touched
+leaves above ``SMALL_COMMIT_ROWS``) runs as Spark jobs.
 
 Idempotent re-apply (at-least-once safety, SURVEY.md §7.4): commits carry a
 ``txn_id``; re-committing an already-recorded txn_id is a no-op, which makes
@@ -143,6 +143,21 @@ def local_quads(spark: SparkSession, rows: list[tuple]) -> DataFrame:
     return spark.createDataFrame(table, QUAD_SCHEMA)
 
 
+def _local_row_bound(df: DataFrame) -> int | None:
+    """Catalyst's ``maxRows`` of ``df``'s analyzed plan when every leaf is
+    a LocalRelation (as :func:`local_quads` builds), else None — so a side
+    that reads the store, a file or an RDD is never collected.  The bound
+    is a sum over a union, the left side of an anti-join, a product over a
+    join and unknown past a generator.  Planning only, no job."""
+    plan = df._jdf.queryExecution().analyzed()
+    leaves = plan.collectLeaves().iterator()
+    while leaves.hasNext():
+        if leaves.next().nodeName() != "LocalRelation":
+            return None
+    bound = plan.maxRows()
+    return bound.get() if bound.isDefined() else None
+
+
 def _collect_bucketed(df: DataFrame | None, bucket_col, dedup: bool) -> pa.Table | None:
     """Collect a bounded quad frame plus its ``bucket`` column as Arrow."""
     if df is None:
@@ -218,10 +233,8 @@ class QuadStore:
         return F.pmod(F.xxhash64(F.col("subject")), F.lit(self.n_buckets))
 
     @staticmethod
-    def _bucket_of(entry: str) -> int | None:
-        if "/bucket=" in entry:
-            return int(entry.rsplit("=", 1)[1])
-        return None  # legacy flat entry: always read
+    def _bucket_of(entry: str) -> int:
+        return int(entry.rsplit("=", 1)[1])
 
     # commits at or below this row count skip the bucket shuffle: a single
     # task writes every bucket leaf.  Request-sized HTTP mutations and
@@ -230,14 +243,15 @@ class QuadStore:
     # write parallelism and file sizing hold at scale.
     SMALL_COMMIT_ROWS = 200_000
 
-    # hinted commits at or below THIS row count per side, whose touched
-    # bucket leaves hold at most SMALL_COMMIT_ROWS rows, run on the DRIVER
-    # in Arrow (_driver_commit): the payload is collected (LocalRelation-
-    # backed payloads collect without a job), only the touched leaves are
-    # read, and the bucket rewrite is written with pyarrow — zero Spark
-    # jobs per commit.  Request-sized HTTP mutations and trickle-sized
-    # ingest micro-batches take it at any store size; bulk batches and
-    # unhinted commits keep the distributed writer.
+    # commits whose every side reads only local rows, at most THIS many
+    # per side, and whose touched bucket leaves hold at most
+    # SMALL_COMMIT_ROWS rows, run on the DRIVER in Arrow (_driver_commit):
+    # the payload is collected (LocalRelation-backed payloads collect
+    # without a job), only the touched leaves are read, and the bucket
+    # rewrite is written with pyarrow — zero Spark jobs per commit.
+    # Request-sized HTTP mutations and trickle-sized ingest micro-batches
+    # take it at any store size; bulk batches and payloads that read the
+    # store keep the distributed writer.
     DRIVER_COMMIT_ROWS = 20_000
 
     def _write_partitioned(self, df: DataFrame, small: bool = False) -> list[str]:
@@ -272,6 +286,9 @@ class QuadStore:
         with open(self._manifest_path()) as f:
             manifest = json.load(f)
         manifest.setdefault("tombstones", [])  # pre-grace manifests
+        flat = [f for f in manifest["files"] if "/bucket=" not in f]
+        if flat:  # a pre-bucket store: refuse it rather than read it differently
+            raise ValueError(f"{self._manifest_path()}: entries without /bucket=N: {flat}")
         return manifest
 
     def _write_manifest(self, manifest: dict) -> None:
@@ -310,32 +327,24 @@ class QuadStore:
         ``bucket = <const>`` then constant-folds every other branch to an
         empty relation and Catalyst prunes their files from the plan —
         point lookups (constant-subject SPARQL patterns, DESCRIBE) read
-        1/n_buckets of the store.  Falls back to the flat scan when any
-        legacy un-bucketed leaf is present."""
+        1/n_buckets of the store."""
         manifest = self._read_manifest()
         if not manifest["files"]:
             df = spark.createDataFrame([], QUAD_SCHEMA)
             return df.withColumn("bucket", F.lit(None).cast("int")) if with_bucket else df
-        if with_bucket:
-            by_bucket: dict[int | None, list[str]] = {}
-            for f in manifest["files"]:
-                by_bucket.setdefault(self._bucket_of(f), []).append(f)
-            if None not in by_bucket:
-                parts = [
-                    spark.read.schema(QUAD_SCHEMA)
-                    .parquet(*[os.path.join(self.files_dir, f) for f in fs])
-                    .withColumn("bucket", F.lit(b))
-                    for b, fs in sorted(by_bucket.items())
-                ]
-                df = parts[0]
-                for p in parts[1:]:
-                    df = df.unionByName(p)
-                return df
-        paths = [os.path.join(self.files_dir, f) for f in manifest["files"]]
-        df = spark.read.schema(QUAD_SCHEMA).parquet(*paths)
-        if with_bucket:
-            df = df.withColumn("bucket", self._bucket_col().cast("int"))
-        return df
+        if not with_bucket:
+            paths = [os.path.join(self.files_dir, f) for f in manifest["files"]]
+            return spark.read.schema(QUAD_SCHEMA).parquet(*paths)
+        by_bucket: dict[int, list[str]] = {}
+        for f in manifest["files"]:
+            by_bucket.setdefault(self._bucket_of(f), []).append(f)
+        parts = [
+            spark.read.schema(QUAD_SCHEMA)
+            .parquet(*[os.path.join(self.files_dir, f) for f in fs])
+            .withColumn("bucket", F.lit(b))
+            for b, fs in sorted(by_bucket.items())
+        ]
+        return reduce(DataFrame.unionByName, parts)
 
     def count(self, spark: SparkSession) -> int:
         return self.read(spark).count()
@@ -350,8 +359,6 @@ class QuadStore:
         assume_unique: bool = False,
         broadcast_deletes: bool = True,
         broadcast_adds: bool = True,
-        n_adds_hint: int | None = None,
-        n_deletes_hint: int | None = None,
     ) -> int:
         """Atomically apply net adds and deletes; returns new version.
 
@@ -368,12 +375,12 @@ class QuadStore:
         COPY) must pass False so the join shuffles instead of broadcasting
         a store-sized side into every executor (and the driver).
 
-        ``n_adds_hint``/``n_deletes_hint`` are row counts (or upper bounds)
-        the caller already knows (an HTTP handler that parsed the payload
-        on the driver, the projector's bounded collect).  When every
-        present side is hinted at most ``DRIVER_COMMIT_ROWS`` and the
-        touched bucket leaves hold at most ``SMALL_COMMIT_ROWS`` rows, the
-        commit runs on the driver in Arrow (``_driver_commit``).
+        The store picks the writer itself.  When every present side reads
+        only local rows (a :func:`local_quads` payload, possibly combined
+        with others by unions and anti-joins) and its plan bounds it to at
+        most ``DRIVER_COMMIT_ROWS`` rows, and the touched bucket leaves hold
+        at most ``SMALL_COMMIT_ROWS`` rows, the commit runs on the driver
+        in Arrow (``_driver_commit``); otherwise as Spark jobs.
 
         Thread-safe: holds the per-store write lock for the whole
         read-manifest -> write-files -> swap-manifest sequence, so HTTP
@@ -383,7 +390,7 @@ class QuadStore:
         with self._write_lock:
             return self._commit_locked(
                 spark, adds, deletes, txn_id, assume_unique,
-                broadcast_deletes, broadcast_adds, n_adds_hint, n_deletes_hint,
+                broadcast_deletes, broadcast_adds,
             )
 
     def _commit_locked(
@@ -395,8 +402,6 @@ class QuadStore:
         assume_unique: bool,
         broadcast_deletes: bool = True,
         broadcast_adds: bool = True,
-        n_adds_hint: int | None = None,
-        n_deletes_hint: int | None = None,
     ) -> int:
         manifest = self._read_manifest()
         if txn_id is not None and txn_id in manifest["txns"]:
@@ -406,22 +411,18 @@ class QuadStore:
         new_files: list[str] = []
         drop_files: list[str] = []
 
-        # driver path only when EVERY present side comes with a hint: a
-        # hintless side may be store-sized and must not be collected
-        if (
-            (n_adds_hint is not None or n_deletes_hint is not None)
-            and (adds is None or n_adds_hint is not None)
-            and (deletes is None or n_deletes_hint is not None)
-            and (n_adds_hint or 0) <= self.DRIVER_COMMIT_ROWS
-            and (n_deletes_hint or 0) <= self.DRIVER_COMMIT_ROWS
-        ):
+        # driver path only when EVERY present side is local and bounded: a
+        # side that reads the store may be store-sized and must not be
+        # collected
+        bounds = [_local_row_bound(df) for df in (adds, deletes) if df is not None]
+        if all(b is not None and b <= self.DRIVER_COMMIT_ROWS for b in bounds):
             version = self._driver_commit(
                 manifest, adds, deletes, txn_id, assume_unique
             )
             if version is not None:
                 return version
             # fall through to the Spark path when the touched leaves are
-            # too big (or a legacy flat leaf is present)
+            # too big
 
         del_buckets: set[int] = set()
         if deletes is not None:
@@ -437,11 +438,7 @@ class QuadStore:
         if del_buckets and current_files:
             # Rewrite-on-delete, restricted to the buckets the delete keys
             # hash to: unaffected bucket leaves are carried over untouched.
-            affected = [
-                f
-                for f in current_files
-                if self._bucket_of(f) is None or self._bucket_of(f) in del_buckets
-            ]
+            affected = [f for f in current_files if self._bucket_of(f) in del_buckets]
             untouched = [f for f in current_files if f not in affected]
             if affected:
                 paths = [os.path.join(self.files_dir, f) for f in affected]
@@ -468,11 +465,7 @@ class QuadStore:
             add_stats = adds.groupBy(self._bucket_col().alias("b")).count().collect()
             add_buckets = {r["b"] for r in add_stats}
             n_adds = sum(r["count"] for r in add_stats)
-            scan_files = [
-                f
-                for f in current_files
-                if self._bucket_of(f) is None or self._bucket_of(f) in add_buckets
-            ]
+            scan_files = [f for f in current_files if self._bucket_of(f) in add_buckets]
             if scan_files:
                 paths = [os.path.join(self.files_dir, f) for f in scan_files]
                 current = spark.read.schema(QUAD_SCHEMA).parquet(*paths)
@@ -518,12 +511,9 @@ class QuadStore:
         one leaf in the Spark writer's ``files/<uuid>/bucket=N`` layout.
         Untouched buckets carry over as they are.
 
-        Returns the new version, or None to fall back to the Spark path:
-        the touched leaves hold more than ``SMALL_COMMIT_ROWS`` rows, or the
-        store still has a legacy un-bucketed leaf."""
+        Returns the new version, or None to fall back to the Spark path
+        when the touched leaves hold more than ``SMALL_COMMIT_ROWS`` rows."""
         files = manifest["files"]
-        if any(self._bucket_of(f) is None for f in files):
-            return None
         add_t = _collect_bucketed(adds, self._bucket_col(), dedup=not assume_unique)
         del_t = _collect_bucketed(deletes, self._bucket_col(), dedup=False)
         touched = sorted(
@@ -586,11 +576,11 @@ class QuadStore:
         long-running connector accumulates O(commits) files and scan/task
         overhead grows unboundedly — the classic streaming-ingest failure
         mode at scale.  Compaction reads each bucket whose leaf count is
-        >= ``min_files_per_bucket`` (plus any legacy un-bucketed leaves),
-        rewrites it as a single leaf, and atomically swaps the manifest —
-        the same MVCC swap as a commit, so concurrent readers keep their
-        snapshot and the single writer can run this between batches (the
-        reference's TDB2 has the analogous offline ``compact`` operation).
+        >= ``min_files_per_bucket``, rewrites it as a single leaf, and
+        atomically swaps the manifest — the same MVCC swap as a commit, so
+        concurrent readers keep their snapshot and the single writer can
+        run this between batches (the reference's TDB2 has the analogous
+        offline ``compact`` operation).
         Returns the new version, or the current one if nothing to do.
         """
         with self._write_lock:
@@ -598,14 +588,11 @@ class QuadStore:
 
     def _compact_locked(self, spark: SparkSession, min_files_per_bucket: int) -> int:
         manifest = self._read_manifest()
-        by_bucket: dict[int | None, list[str]] = {}
+        by_bucket: dict[int, list[str]] = {}
         for f in manifest["files"]:
             by_bucket.setdefault(self._bucket_of(f), []).append(f)
-        merge: list[str] = []
-        for b, fs in by_bucket.items():
-            if b is None or len(fs) >= min_files_per_bucket:
-                merge.extend(fs)
-        if len(merge) <= 1 and None not in by_bucket:
+        merge = [f for fs in by_bucket.values() if len(fs) >= min_files_per_bucket for f in fs]
+        if len(merge) <= 1:
             return manifest["version"]
         paths = [os.path.join(self.files_dir, f) for f in merge]
         merged = spark.read.schema(QUAD_SCHEMA).parquet(*paths)
@@ -636,14 +623,28 @@ class QuadStore:
 
     def vacuum(self) -> int:
         """Delete every tombstoned leaf regardless of age (admin op, like
-        Delta VACUUM with retention 0).  Returns the number removed."""
+        Delta VACUUM with retention 0), and every leaf the manifest does not
+        reference: the orphans of a commit that died after writing its
+        leaves but before its manifest swap.  A ``files/<uuid>`` dir with no
+        live leaf goes whole.  Returns the number of leaves removed."""
         with self._write_lock:
             manifest = self._read_manifest()
-            n = len(manifest["tombstones"])
-            for f, _dropped_at in manifest["tombstones"]:
-                self._delete_leaf(f)
             manifest["tombstones"] = []
             self._write_manifest(manifest)
+            # with no tombstone left, every leaf the manifest does not list
+            # is dead; a crash mid-way leaves only more of them for next time
+            live = set(manifest["files"])
+            n = 0
+            for name in os.listdir(self.files_dir):
+                leaves = {
+                    f"{name}/{d}"
+                    for d in os.listdir(os.path.join(self.files_dir, name))
+                    if d.startswith("bucket=")
+                }
+                dead = leaves - live
+                n += len(dead)
+                for f in [name] if dead == leaves else dead:
+                    self._delete_leaf(f)
             return n
 
     def _delete_leaf(self, f: str) -> None:

@@ -160,6 +160,37 @@ class TestConnectedComponents:
         }
         assert got == expect and calls == [1]  # distributed: no 2nd call
 
+    def test_null_string_ids_match_distributed_path(self, spark, monkeypatch):
+        # NULL endpoints: the fixpoint's equi-joins never match NULL, so it
+        # merges nothing through them and labels the NULL node from its
+        # smallest neighbour.  The driver union-find must answer the same
+        # (it used to raise TypeError comparing None with str) at the
+        # default bound and at driver_max_edges = edges, edges±1.
+        from jena_fuseki_kafka_spark.queries import dedup
+
+        calls = []
+        real = dedup._driver_components
+        monkeypatch.setattr(
+            dedup,
+            "_driver_components",
+            lambda e, rows: calls.append(1) or real(e, rows),
+        )
+        pairs = spark.createDataFrame(
+            [("z", None), ("b", None), ("b", "a"), ("q", "r"), (None, None), ("é", "中")],
+            "doc_a string, doc_b string",
+        )  # 12 symmetrized edges
+
+        def labels(**kw):
+            out = dedup.connected_components(pairs, **kw).collect()
+            return sorted((tuple(r) for r in out), key=repr)
+
+        expect = labels(driver_max_edges=0)
+        assert calls == [] and (None, "a") in expect and ("中", "é") in expect
+        for limit, driver in [(None, True), (12, True), (11, False), (13, True)]:
+            n = len(calls)
+            assert labels(driver_max_edges=limit) == expect, limit
+            assert (len(calls) > n) == driver, limit
+
     def test_zero_round_budget_raises_diagnostic_not_nameerror(self, spark):
         # ADVICE r9: with max_rounds <= 0 the loop body never runs; the
         # guard must still raise the intended RuntimeError, not NameError

@@ -504,28 +504,28 @@ class TestVacuumGrace:
         assert store.count(spark) == 12
 
 
-class TestHintedSmallCommit:
-    """Hinted commits (n_adds_hint/n_deletes_hint: the driver-side Arrow
-    path) must preserve set semantics and delete correctness exactly —
-    including payloads that are not LocalRelation-backed."""
+class TestNonLocalPayloadCommit:
+    """Payloads that are not LocalRelation-backed (an RDD, a store read,
+    mixed with local rows) take the Spark path and must preserve set
+    semantics and delete correctness exactly."""
 
-    def test_hinted_add_dedups_against_store(self, spark, tmp_path):
+    def test_rdd_add_dedups_against_store(self, spark, tmp_path):
         store = QuadStore(str(tmp_path / "h"), n_buckets=4)
         rows1 = [("", f"s{i}", "p", "iri", "o", None, None) for i in range(10)]
         rows2 = [("", f"s{i}", "p", "iri", "o", None, None) for i in range(5, 15)]
         store.commit(
             spark,
             adds=spark.createDataFrame(spark.sparkContext.parallelize(rows1, 1), QUAD_SCHEMA),
-            txn_id="h1", assume_unique=True, n_adds_hint=len(rows1),
+            txn_id="h1", assume_unique=True,
         )
         store.commit(
             spark,
             adds=spark.createDataFrame(spark.sparkContext.parallelize(rows2, 1), QUAD_SCHEMA),
-            txn_id="h2", assume_unique=True, n_adds_hint=len(rows2),
+            txn_id="h2", assume_unique=True,
         )
         assert store.count(spark) == 15  # overlap deduplicated
 
-    def test_hinted_delete_rewrites_all_buckets(self, spark, tmp_path):
+    def test_rdd_delete_rewrites_all_buckets(self, spark, tmp_path):
         store = QuadStore(str(tmp_path / "h2"), n_buckets=4)
         rows = [("", f"s{i}", "p", "iri", "o", None, None) for i in range(20)]
         store.commit(spark, adds=spark.createDataFrame(rows, QUAD_SCHEMA), txn_id="h1")
@@ -533,15 +533,15 @@ class TestHintedSmallCommit:
         store.commit(
             spark,
             deletes=spark.createDataFrame(spark.sparkContext.parallelize(dels, 1), QUAD_SCHEMA),
-            txn_id="h2", n_deletes_hint=len(dels),
+            txn_id="h2",
         )
         assert store.count(spark) == 10
         left = {r.subject for r in store.read(spark).collect()}
         assert left == {f"s{i}" for i in range(1, 20, 2)}
 
-    def test_hintless_side_keeps_stats_path(self, spark, tmp_path):
-        # a present side WITHOUT a hint must not inherit the skip: the
-        # mixed call still deletes correctly
+    def test_store_read_side_keeps_stats_path(self, spark, tmp_path):
+        # a side that reads the store sends the whole commit to the Spark
+        # path: the mixed call still deletes correctly
         store = QuadStore(str(tmp_path / "h3"), n_buckets=4)
         rows = [("", f"s{i}", "p", "iri", "o", None, None) for i in range(8)]
         store.commit(spark, adds=spark.createDataFrame(rows, QUAD_SCHEMA), txn_id="h1")
@@ -552,7 +552,6 @@ class TestHintedSmallCommit:
             adds=spark.createDataFrame(adds, QUAD_SCHEMA),
             deletes=dels_df,
             txn_id="h2",
-            n_adds_hint=1,  # deletes side has no hint -> full stats path
         )
         assert store.count(spark) == 8  # 8 - 1 + 1
 
