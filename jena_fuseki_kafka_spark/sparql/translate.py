@@ -187,9 +187,9 @@ class Translator:
         self.quads = quads
         self.max_path_iterations = max_path_iterations
         # when the quad table carries the store's subject-hash ``bucket``
-        # column, constant-subject patterns filter on it — Catalyst
-        # constant-folds the per-bucket union and scans 1/n_buckets of
-        # the store (see QuadStore.read(with_bucket=True))
+        # column, constant-subject patterns filter on it — the filter is a
+        # partition filter of the store's one scan, which then reads
+        # 1/n_buckets of the files (see QuadStore.read(with_bucket=True))
         self.n_buckets = n_buckets if (n_buckets and "bucket" in quads.columns) else None
         self._anon_var = 0
         # Per-TRANSLATION memo tables for property-path machinery (r16):
@@ -728,7 +728,7 @@ class Translator:
 
         q = self.quads
         # bucket pruning: a constant subject hashes to exactly one store
-        # bucket; the filter folds the per-bucket union down to one scan
+        # bucket; the scan prunes the other buckets' files
         if self.n_buckets and s[0] == "iri":
             q = q.filter(
                 F.col("bucket")

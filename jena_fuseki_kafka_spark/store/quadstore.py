@@ -8,10 +8,11 @@ directly: an append-mostly file log plus an atomically-swapped JSON
 manifest.
 
 Layout:
-    <path>/files/<uuid>/bucket=N/   immutable data leaves, partitioned by a
-                                    stable subject-hash bucket
-    <path>/_manifest.json           {"version": N, "files": ["<uuid>/bucket=N", ...]}
-    <path>/_manifest.json.tmp       write-then-os.replace for atomicity
+    <path>/files/bucket=N/<uuid>/   immutable data leaves, Hive-partitioned
+                                    by a stable subject-hash bucket
+    <path>/files/_staging-<uuid>/   a Spark write before its renames
+    <path>/_manifest.json           {"version": N, "files": ["bucket=N/<uuid>", ...]}
+    <path>/_manifest.json.tmp-*     write-then-os.replace for atomicity
 
 Commit protocol (single writer per store, like the reference's one
 projector per dataset — FKRegistry.java:45-99):
@@ -45,14 +46,16 @@ Scale notes (100 TB): data leaves are partitioned by a stable hash bucket
 of subject and the manifest is bucket-granular, so the delete rewrite reads
 and rewrites ONLY the buckets the delete keys hash to — unaffected leaves
 carry over untouched.  On a real cluster you would add graph/predicate
-partition columns + file-level min/max pruning.  Reads are plain ``spark.read.parquet`` over the manifest's file
-list — column pruning and predicate pushdown apply as usual.
+partition columns + file-level min/max pruning.  Every read is one
+parquet scan of manifest leaves, ``bucket`` a Hive partition column:
+bucket filters, column pruning and predicate pushdown apply as usual.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import threading
 import uuid
 
@@ -63,10 +66,12 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..model import QUAD_COLS, QUAD_SCHEMA
 
 _MANIFEST = "_manifest.json"
+_LEAF_SCHEMA = StructType(QUAD_SCHEMA.fields + [StructField("bucket", IntegerType())])
 
 # One write lock per store *path* (realpath-keyed, process-wide): the manifest
 # swap is atomic but commit/compact are read-modify-write over it, so two
@@ -225,7 +230,7 @@ class QuadStore:
                 self._write_manifest({"version": 0, "files": [], "txns": []})
 
     # -- bucket layout ------------------------------------------------------
-    # manifest entries are leaf directories "<uuid>/bucket=N": data is
+    # manifest entries are leaf directories "bucket=N/<uuid>": data is
     # physically partitioned by a stable subject-hash bucket, so deletes
     # (and snapshot dedup) read ONLY the buckets their keys hash to —
     # O(affected buckets), not O(store)
@@ -234,7 +239,7 @@ class QuadStore:
 
     @staticmethod
     def _bucket_of(entry: str) -> int:
-        return int(entry.rsplit("=", 1)[1])
+        return int(entry.split("/", 1)[0][len("bucket="):])
 
     # commits at or below this row count skip the bucket shuffle: a single
     # task writes every bucket leaf.  Request-sized HTTP mutations and
@@ -255,17 +260,19 @@ class QuadStore:
     DRIVER_COMMIT_ROWS = 20_000
 
     def _write_partitioned(self, df: DataFrame, small: bool = False) -> list[str]:
-        """Write df bucket-partitioned under a fresh uuid dir; return the
-        manifest entries (one per non-empty bucket leaf)."""
+        """Write df bucket-partitioned into a staging dir, rename each
+        non-empty ``bucket=N`` dir to ``files/bucket=N/<uuid>`` and return
+        those manifest entries (a crash in between leaves work for vacuum)."""
         name = uuid.uuid4().hex
-        out = os.path.join(self.files_dir, name)
+        staging = os.path.join(self.files_dir, f"_staging-{name}")
         df = df.withColumn("bucket", self._bucket_col())
         df = df.coalesce(1) if small else df.repartition(self.n_buckets, F.col("bucket"))
-        df.write.partitionBy("bucket").mode("overwrite").parquet(out)
-        entries = []
-        for d in sorted(os.listdir(out)):
-            if d.startswith("bucket="):
-                entries.append(f"{name}/{d}")
+        df.write.partitionBy("bucket").mode("overwrite").parquet(staging)
+        entries = sorted(f"{d}/{name}" for d in os.listdir(staging) if d.startswith("bucket="))
+        for e in entries:
+            os.makedirs(os.path.join(self.files_dir, os.path.dirname(e)), exist_ok=True)
+            os.rename(os.path.join(staging, os.path.dirname(e)), os.path.join(self.files_dir, e))
+        shutil.rmtree(staging)
         return entries
 
     def _entry_row_count(self, entry: str) -> int:
@@ -286,9 +293,9 @@ class QuadStore:
         with open(self._manifest_path()) as f:
             manifest = json.load(f)
         manifest.setdefault("tombstones", [])  # pre-grace manifests
-        flat = [f for f in manifest["files"] if "/bucket=" not in f]
-        if flat:  # a pre-bucket store: refuse it rather than read it differently
-            raise ValueError(f"{self._manifest_path()}: entries without /bucket=N: {flat}")
+        bad = [f for f in manifest["files"] if not f.startswith("bucket=")]
+        if bad:  # an older layout: refuse it rather than read it differently
+            raise ValueError(f"{self._manifest_path()}: entries not in bucket=N/<uuid>: {bad}")
         return manifest
 
     def _write_manifest(self, manifest: dict) -> None:
@@ -321,30 +328,24 @@ class QuadStore:
         """Current committed snapshot as a DataFrame (MVCC: uses the file
         list frozen at manifest-read time).
 
-        ``with_bucket=True`` adds the subject-hash ``bucket`` column by
-        building the plan as one scan per bucket (each tagged with its
-        constant bucket id) unioned together.  A downstream filter
-        ``bucket = <const>`` then constant-folds every other branch to an
-        empty relation and Catalyst prunes their files from the plan —
-        point lookups (constant-subject SPARQL patterns, DESCRIBE) read
-        1/n_buckets of the store."""
-        manifest = self._read_manifest()
-        if not manifest["files"]:
-            df = spark.createDataFrame([], QUAD_SCHEMA)
-            return df.withColumn("bucket", F.lit(None).cast("int")) if with_bucket else df
-        if not with_bucket:
-            paths = [os.path.join(self.files_dir, f) for f in manifest["files"]]
-            return spark.read.schema(QUAD_SCHEMA).parquet(*paths)
-        by_bucket: dict[int, list[str]] = {}
-        for f in manifest["files"]:
-            by_bucket.setdefault(self._bucket_of(f), []).append(f)
-        parts = [
-            spark.read.schema(QUAD_SCHEMA)
-            .parquet(*[os.path.join(self.files_dir, f) for f in fs])
-            .withColumn("bucket", F.lit(b))
-            for b, fs in sorted(by_bucket.items())
-        ]
-        return reduce(DataFrame.unionByName, parts)
+        The snapshot is one parquet scan of the manifest's leaves whose
+        subject-hash ``bucket`` column comes from the ``bucket=N`` dirs.
+        A downstream filter ``bucket = <const>`` becomes one of the scan's
+        partition filters, so point lookups (constant-subject SPARQL
+        patterns, DESCRIBE) read 1/n_buckets of the store's files.
+        ``with_bucket=False`` projects the column away."""
+        return self._scan(spark, self._read_manifest()["files"], with_bucket)
+
+    def _scan(self, spark: SparkSession, entries: list[str], with_bucket: bool = False) -> DataFrame:
+        """Some manifest leaves as one parquet scan.  ``basePath`` makes
+        Spark's partition discovery read ``bucket`` off the leaf paths."""
+        paths = [os.path.join(self.files_dir, e) for e in entries]
+        df = (
+            spark.read.schema(_LEAF_SCHEMA).option("basePath", self.files_dir).parquet(*paths)
+            if paths
+            else spark.createDataFrame([], _LEAF_SCHEMA)
+        )
+        return df if with_bucket else df.drop("bucket")
 
     def count(self, spark: SparkSession) -> int:
         return self.read(spark).count()
@@ -441,8 +442,7 @@ class QuadStore:
             affected = [f for f in current_files if self._bucket_of(f) in del_buckets]
             untouched = [f for f in current_files if f not in affected]
             if affected:
-                paths = [os.path.join(self.files_dir, f) for f in affected]
-                current = spark.read.schema(QUAD_SCHEMA).parquet(*paths)
+                current = self._scan(spark, affected)
                 survivors = _anti_join_quads(
                     current, deletes, broadcast_right=broadcast_deletes
                 )
@@ -467,8 +467,7 @@ class QuadStore:
             n_adds = sum(r["count"] for r in add_stats)
             scan_files = [f for f in current_files if self._bucket_of(f) in add_buckets]
             if scan_files:
-                paths = [os.path.join(self.files_dir, f) for f in scan_files]
-                current = spark.read.schema(QUAD_SCHEMA).parquet(*paths)
+                current = self._scan(spark, scan_files)
                 # set semantics: only insert quads not already present.
                 # The store side is the big one — find the duplicates by
                 # broadcasting the (micro-batch-sized) adds and scanning the
@@ -508,7 +507,7 @@ class QuadStore:
         are null-safe Arrow anti-joins (deletes first, then adds deduped
         against the survivors, as on the Spark path), and the bucket's new
         rows — survivors if anything was deleted, plus fresh adds — go to
-        one leaf in the Spark writer's ``files/<uuid>/bucket=N`` layout.
+        one ``files/bucket=N/<uuid>`` leaf, as the Spark writer lays out.
         Untouched buckets carry over as they are.
 
         Returns the new version, or None to fall back to the Spark path
@@ -544,10 +543,10 @@ class QuadStore:
                 drop_files.extend(leaves[b])
                 out = kept if out is None else pa.concat_tables([kept, out])
             if out is not None and out.num_rows:
-                leaf = os.path.join(self.files_dir, name, f"bucket={b}")
-                os.makedirs(leaf, exist_ok=True)
-                pq.write_table(out, os.path.join(leaf, "part-00000.parquet"))
-                new_files.append(f"{name}/bucket={b}")
+                entry = f"bucket={b}/{name}"
+                os.makedirs(os.path.join(self.files_dir, entry))
+                pq.write_table(out, os.path.join(self.files_dir, entry, "part-00000.parquet"))
+                new_files.append(entry)
 
         dropped = set(drop_files)
         manifest["version"] += 1
@@ -594,8 +593,7 @@ class QuadStore:
         merge = [f for fs in by_bucket.values() if len(fs) >= min_files_per_bucket for f in fs]
         if len(merge) <= 1:
             return manifest["version"]
-        paths = [os.path.join(self.files_dir, f) for f in merge]
-        merged = spark.read.schema(QUAD_SCHEMA).parquet(*paths)
+        merged = self._scan(spark, merge)
         new_entries = self._write_partitioned(merged)
         untouched = [f for f in manifest["files"] if f not in set(merge)]
         manifest["version"] += 1
@@ -625,29 +623,26 @@ class QuadStore:
         """Delete every tombstoned leaf regardless of age (admin op, like
         Delta VACUUM with retention 0), and every leaf the manifest does not
         reference: the orphans of a commit that died after writing its
-        leaves but before its manifest swap.  A ``files/<uuid>`` dir with no
-        live leaf goes whole.  Returns the number of leaves removed."""
+        leaves but before its manifest swap.  Staging dirs of a Spark write
+        that died before its renames go too.  Returns the number of leaf
+        and staging dirs removed."""
         with self._write_lock:
             manifest = self._read_manifest()
             manifest["tombstones"] = []
             self._write_manifest(manifest)
-            # with no tombstone left, every leaf the manifest does not list
-            # is dead; a crash mid-way leaves only more of them for next time
+            # with no tombstone left, every unlisted leaf and every staging
+            # dir is dead; a crash mid-way leaves only more for next time
             live = set(manifest["files"])
-            n = 0
-            for name in os.listdir(self.files_dir):
-                leaves = {
-                    f"{name}/{d}"
-                    for d in os.listdir(os.path.join(self.files_dir, name))
-                    if d.startswith("bucket=")
-                }
-                dead = leaves - live
-                n += len(dead)
-                for f in [name] if dead == leaves else dead:
-                    self._delete_leaf(f)
-            return n
+            dead = []
+            for d in os.listdir(self.files_dir):
+                if d.startswith("bucket="):
+                    leaves = (f"{d}/{u}" for u in os.listdir(os.path.join(self.files_dir, d)))
+                    dead += [f for f in leaves if f not in live]
+                else:  # a staging dir
+                    dead.append(d)
+            for f in dead:
+                self._delete_leaf(f)
+            return len(dead)
 
     def _delete_leaf(self, f: str) -> None:
-        import shutil
-
         shutil.rmtree(os.path.join(self.files_dir, f), ignore_errors=True)

@@ -1051,8 +1051,10 @@ class TestMiscBuiltins:
 
 
 class TestBucketPruning:
-    """Constant-subject patterns must scan only the one store bucket the
-    subject hashes to (QuadStore.read(with_bucket=True) union-fold)."""
+    """Constant-subject patterns must read only the files of the one store
+    bucket the subject hashes to: QuadStore.read(with_bucket=True) is one
+    parquet scan with ``bucket`` as its partition column, so the pattern's
+    bucket filter is a partition filter of that scan."""
 
     def _store(self, spark, tmp_path):
         from jena_fuseki_kafka_spark.model import QUAD_SCHEMA
@@ -1066,16 +1068,63 @@ class TestBucketPruning:
         store.commit(spark, adds=spark.createDataFrame(rows, QUAD_SCHEMA), txn_id="c1")
         return store
 
+    @classmethod
+    def _scans(cls, plan):
+        """The parquet scan nodes of an executed plan, through AQE stages."""
+        kind = plan.getClass().getSimpleName()
+        if kind == "FileSourceScanExec":
+            return [plan]
+        if kind == "AdaptiveSparkPlanExec":
+            return cls._scans(plan.executedPlan())
+        if kind.endswith("QueryStageExec"):
+            return cls._scans(plan.plan())
+        kids = plan.children()
+        return [s for i in range(kids.size()) for s in cls._scans(kids.apply(i))]
+
     def test_point_lookup_scans_one_bucket(self, spark, tmp_path):
+        import glob
+        import os
+        import re
+
         from jena_fuseki_kafka_spark.sparql import SparqlEngine
 
         store = self._store(spark, tmp_path)
         eng = SparqlEngine.from_store(spark, store)
         df = eng.query("SELECT ?o WHERE { <http://e/s7> <http://e/p> ?o }")
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Scan parquet") == 1, plan  # 7 of 8 branches folded
         vals = [r["o"]["value"] for r in df.collect()]
         assert vals == ["http://e/o7"]
+        (scan,) = self._scans(df._jdf.queryExecution().executedPlan())
+        text = scan.toString()
+        assert "bucket" in re.search(r"PartitionFilters: \[([^\]]*)\]", text).group(1), text
+        b = spark.range(1).select(F.pmod(F.xxhash64(F.lit("http://e/s7")), F.lit(8))).first()[0]
+        files = glob.glob(os.path.join(store.files_dir, f"bucket={b}", "*", "*.parquet"))
+        n_all = len(glob.glob(os.path.join(store.files_dir, "bucket=*", "*", "*.parquet")))
+        assert scan.metrics().apply("numFiles").value() == len(files) < n_all
+
+    def test_from_store_lists_leaves_without_a_job(self, spark, tmp_path):
+        """Past Spark's default parallel-listing threshold (32 paths) a read
+        of that many leaves runs a listing job; the session lists the
+        store's leaves on the driver, so building the engine runs none."""
+        from collections import Counter
+
+        from jena_fuseki_kafka_spark.sparql import SparqlEngine
+        from jena_fuseki_kafka_spark.store import QuadStore, local_quads
+
+        store = QuadStore(str(tmp_path / "many"), n_buckets=2)
+        for c in range(34):
+            rows = [("", f"http://e/s{i}", "http://e/p", "iri", f"http://e/o{c}", None, None)
+                    for i in range(8)]
+            store.commit(spark, adds=local_quads(spark, rows), txn_id=f"c{c}")
+        per_bucket = Counter(map(store._bucket_of, store._read_manifest()["files"]))
+        assert sorted(per_bucket) == [0, 1] and min(per_bucket.values()) >= 34
+        sc = spark.sparkContext
+        group = f"from-store-{tmp_path.name}"
+        sc.setJobGroup(group, group)
+        try:
+            SparqlEngine.from_store(spark, store)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
     def test_variable_subject_reads_all_buckets(self, spark, tmp_path):
         from jena_fuseki_kafka_spark.sparql import SparqlEngine

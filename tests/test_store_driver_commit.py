@@ -19,6 +19,7 @@ import datetime
 import itertools
 import json
 import os
+import re
 import uuid
 from collections import Counter
 
@@ -362,42 +363,49 @@ def test_store_picks_commit_path(spark, tmp_path, monkeypatch, driver_commits):
     assert "http://e/a1" not in subjects and subjects["http://e/a0"] == 2
 
 
-def test_flat_manifest_entry_is_refused(spark, tmp_path):
-    """A manifest entry without /bucket=N (the pre-bucket layout) makes
+@pytest.mark.parametrize("suffix", ["", "/bucket=0"], ids=["flat", "uuid-bucket"])
+def test_old_layout_entry_is_refused(spark, tmp_path, suffix):
+    """A manifest entry outside the bucket=N/<uuid> layout — a flat
+    pre-bucket ``<uuid>`` leaf or an older ``<uuid>/bucket=N`` one — makes
     read, commit and compact fail naming it, instead of reading it."""
     store = QuadStore(str(tmp_path / "legacy"), n_buckets=2)
-    flat = uuid.uuid4().hex
-    os.makedirs(os.path.join(store.files_dir, flat))
+    old = uuid.uuid4().hex + suffix
+    os.makedirs(os.path.join(store.files_dir, old))
     rows = _quads("f", 3)
     pq.write_table(
         pa.table([pa.array(c, pa.string()) for c in zip(*rows)], names=list(QUAD_SCHEMA.names)),
-        os.path.join(store.files_dir, flat, "part-00000.parquet"),
+        os.path.join(store.files_dir, old, "part-00000.parquet"),
     )
     with open(os.path.join(store.path, "_manifest.json"), "w") as f:
-        json.dump({"version": 1, "files": [flat], "txns": [], "tombstones": []}, f)
+        json.dump({"version": 1, "files": [old], "txns": [], "tombstones": []}, f)
     for op in (
         lambda: store.read(spark),
         lambda: store.commit(spark, adds=local_quads(spark, _quads("g", 1)), txn_id="l1"),
         lambda: store.compact(spark, min_files_per_bucket=1),
     ):
-        with pytest.raises(ValueError, match=flat):
+        with pytest.raises(ValueError, match=re.escape(old)):
             op()
 
 
 def _leaves_on_disk(store):
     return {
-        f"{name}/{d}"
-        for name in os.listdir(store.files_dir)
-        for d in os.listdir(os.path.join(store.files_dir, name))
-        if d.startswith("bucket=")
+        f"{b}/{leaf}"
+        for b in os.listdir(store.files_dir)
+        if b.startswith("bucket=")
+        for leaf in os.listdir(os.path.join(store.files_dir, b))
     }
+
+
+def _staging_dirs(store):
+    return [d for d in os.listdir(store.files_dir) if not d.startswith("bucket=")]
 
 
 @pytest.mark.parametrize("force_spark", [False, True])
 def test_vacuum_collects_orphan_leaves(spark, tmp_path, monkeypatch, force_spark):
     """A commit that dies after writing its leaves but before the manifest
-    swap leaves orphan leaves; vacuum() deletes them (and their emptied
-    uuid dirs) without touching the snapshot."""
+    swap leaves orphan leaves; vacuum() deletes them without touching the
+    snapshot.  On the Spark writer, so does one that dies between its
+    partitioned write and the renames that move its leaves into place."""
     store = QuadStore(str(tmp_path / f"o{force_spark}"), n_buckets=2)
     store.commit(spark, adds=local_quads(spark, _quads("a", 6)), txn_id="o1")
     if force_spark:
@@ -422,9 +430,28 @@ def test_vacuum_collects_orphan_leaves(spark, tmp_path, monkeypatch, force_spark
     assert _leaves_on_disk(store) - live, "the dead commit wrote no leaf"
 
     assert store.vacuum() >= 1
-    assert _leaves_on_disk(store) == live
-    assert set(os.listdir(store.files_dir)) == {f.split("/")[0] for f in live}
+    assert _leaves_on_disk(store) == live and not _staging_dirs(store)
     assert store.version == version and _snapshot(spark, store) == before
+
+    if force_spark:
+        real_rename, renames = os.rename, []
+
+        def rename_crash_once(src, dst):
+            renames.append(src)
+            if len(renames) == 2:  # one leaf moved, the rest still staged
+                monkeypatch.setattr(os, "rename", real_rename)
+                raise OSError("crash between the Spark write and its renames")
+            real_rename(src, dst)
+
+        monkeypatch.setattr(os, "rename", rename_crash_once)
+        with pytest.raises(OSError, match="renames"):
+            store.commit(spark, **commit)
+        staged = _staging_dirs(store)
+        assert len(staged) == 1, staged
+        assert os.listdir(os.path.join(store.files_dir, staged[0]))
+        assert store.vacuum() >= 2  # the staging dir and the moved leaf
+        assert _leaves_on_disk(store) == live and not _staging_dirs(store)
+        assert store.version == version and _snapshot(spark, store) == before
     # the txn never committed, so it still applies
     store.commit(spark, **commit)
     assert _snapshot(spark, store) == Counter(_quads("a", 6)[2:] + _quads("b", 6))

@@ -363,7 +363,7 @@ class TestBucketPruning:
         store.commit(spark, deletes=dels)
         after = set(store._read_manifest()["files"])
 
-        untouched_before = {f for f in before if not f.endswith(f"bucket={target_bucket}")}
+        untouched_before = {f for f in before if not f.startswith(f"bucket={target_bucket}/")}
         assert untouched_before <= after  # carried over byte-identical
         assert store.count(spark) == 63
 
@@ -449,13 +449,12 @@ class TestVacuumGrace:
         return spark.createDataFrame(rows, QUAD_SCHEMA)
 
     def _on_disk(self, store):
-        out = set()
-        for name in os.listdir(store.files_dir):
-            sub = os.path.join(store.files_dir, name)
-            for leaf in os.listdir(sub):
-                if leaf.startswith("bucket="):
-                    out.add(f"{name}/{leaf}")
-        return out
+        return {
+            f"{b}/{leaf}"
+            for b in os.listdir(store.files_dir)
+            if b.startswith("bucket=")
+            for leaf in os.listdir(os.path.join(store.files_dir, b))
+        }
 
     def test_dropped_files_survive_grace_then_vanish(self, spark, tmp_path):
         store = QuadStore(str(tmp_path / "qg"), n_buckets=2, grace_versions=2)

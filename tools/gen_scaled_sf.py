@@ -10,13 +10,16 @@ structure scales LINEARLY instead of creating k-fold exact-duplicate
 clusters (which would send the dedup pair joins quadratic in k and
 measure a blowup no real corpus has):
 
-- documents: per copy i>0, every whitespace token gets the suffix str(i)
-  — an injective per-token rename, so within-copy Jaccard/shingle
-  structure is isomorphic to the base corpus while cross-copy documents
-  share zero shingles (no cross-copy verified pairs).  n_chars is
-  recomputed (it must equal length(text); d04 buckets on it).
-- embeddings: per copy i, dimensions are cyclically rotated by (i*7)%64
-  — rotation preserves every within-copy dot product/cosine exactly,
+- documents: per copy i>0, every whitespace token gets the suffix
+  '_' + str(i) — an injective per-token rename (a bare str(i) would
+  make word "a1" of copy 1 and word "a" of copy 11 both "a11"), so
+  within-copy Jaccard/shingle structure is isomorphic to the base
+  corpus while cross-copy documents share zero shingles (no cross-copy
+  verified pairs).  n_chars is recomputed (it must equal length(text);
+  d04 buckets on it).
+- embeddings: per copy i, dimensions are cyclically rotated by (i*7)%64,
+  so k is at most 64 (copy 64 would duplicate the base exactly) —
+  rotation preserves every within-copy dot product/cosine exactly,
   while cross-copy cosines stay near-orthogonal-random.  vec_id offset
   is a multiple of CENTROID_MOD*S10_BATCH_MOD*PQ_CODE_MOD (61*5*37) so
   each copy's centroid/batch/codeword membership pattern matches the
@@ -29,7 +32,7 @@ measure a blowup no real corpus has):
 
 Deterministic: pure arithmetic on the base tables, no RNG, no clock.
 
-Usage: python tools/gen_scaled_sf.py [--k 10] [--base /root/testdata/sf0.1] out_dir
+Usage: python tools/gen_scaled_sf.py [--k 1..64, default 10] [--base /root/testdata/sf0.1] out_dir
 """
 
 from __future__ import annotations
@@ -50,7 +53,7 @@ ORDER_OFFSET = 10_000_000
 
 
 def _suffix_words(text: str, i: int) -> str:
-    suf = str(i)
+    suf = "_" + str(i)
     return " ".join(w + suf for w in text.split(" "))
 
 
@@ -126,7 +129,7 @@ def scale_lineitem(base: pa.Table, k: int) -> pa.Table:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--k", type=int, default=10)
+    ap.add_argument("--k", type=int, default=10, choices=range(1, 65), metavar="1..64")
     ap.add_argument("--base", default="/root/testdata/sf0.1")
     ap.add_argument("out_dir")
     args = ap.parse_args()
